@@ -83,3 +83,22 @@ def test_observed_checks_piggyback_on_action(spark):
     assert n == 4
     assert results["not_null_stop_id"].status == "fail"
     assert results["between_time_to_station_s_0_3600"].status == "warn"
+
+
+def test_observed_results_equal_pass_results(spark):
+    """The observed path and the aggregation pass share one rule set:
+    pass, warn (out-of-range timeToStation), fail and empty-input
+    skipped all come out identical on the same frame."""
+    from tfl_realtime_lakehouse_spark.dq.checks import (
+        attach_observation,
+        results_from_observation,
+    )
+
+    stg = _stg(spark)
+    for df in (stg, stg.limit(0)):
+        observed, obs = attach_observation(df, STG_ARRIVALS_CHECKS)
+        observed.write.format("noop").mode("overwrite").save()
+        got = results_from_observation(obs, STG_ARRIVALS_CHECKS)
+        assert got == run_checks(df, STG_ARRIVALS_CHECKS)
+        statuses = {r.status for r in got}
+        assert statuses == ({"pass", "warn", "fail"} if got[0].total else {"skipped"})

@@ -4,9 +4,15 @@ DQ wiring, lineage-as-data report."""
 from __future__ import annotations
 
 import json
+from dataclasses import asdict
 
 from pyspark.sql import functions as F
 
+from tfl_realtime_lakehouse_spark.dq.checks import (
+    FCT_HEADWAYS_CHECKS,
+    STG_ARRIVALS_CHECKS,
+    run_checks,
+)
 from tfl_realtime_lakehouse_spark.plans.runner import run_pipeline
 from tfl_realtime_lakehouse_spark.sources.tables import write_bronze
 
@@ -19,14 +25,18 @@ ROWS = [
 ]
 
 
-def test_run_pipeline_report_and_tables(spark, tmp_path):
-    raw_dir = str(tmp_path / "bronze")
+def _write_bronze(spark, rows, raw_dir):
     df = spark.createDataFrame(
-        ROWS,
+        rows,
         "stopId string, lineId string, platformName string, destinationName string, "
         "timeToStation long, timestamp string",
     ).withColumn("date", F.lit("2025-01-01").cast("date"))
     write_bronze(df, raw_dir)
+
+
+def test_run_pipeline_report_and_tables(spark, tmp_path):
+    raw_dir = str(tmp_path / "bronze")
+    _write_bronze(spark, ROWS, raw_dir)
 
     report = run_pipeline(spark, raw_dir, save=True)
     json.dumps(report)  # must be JSON-serializable (lineage as data)
@@ -57,3 +67,25 @@ def test_run_pipeline_empty_input_skips_checks(spark, tmp_path):
     assert all(
         c["status"] == "skipped" for m in report["models"] for c in m["checks"]
     )
+
+
+def test_observed_report_equals_recount_and_check_pass(spark, tmp_path):
+    """Rows and check results observed on the model writes equal a
+    recount and a ``run_checks`` pass over the saved tables, on a bronze
+    with a warning (out-of-range timeToStation) and a failure (null stop)."""
+    raw_dir = str(tmp_path / "bronze")
+    dirty = [
+        ("S1", "central", "P1", "D", 4000, "2025-01-01T10:12:00Z"),
+        (None, "central", "P1", "D", 50, "2025-01-01T10:13:00Z"),
+    ]
+    _write_bronze(spark, ROWS + dirty, raw_dir)
+
+    report = run_pipeline(spark, raw_dir, save=True)
+    statuses = set()
+    for model, checks in zip(report["models"], (STG_ARRIVALS_CHECKS, FCT_HEADWAYS_CHECKS)):
+        table = spark.table(model["output"])
+        assert model["rows"] == table.count()
+        assert model["checks"] == [asdict(r) for r in run_checks(table, checks)]
+        statuses |= {c["status"] for c in model["checks"]}
+    assert statuses == {"pass", "warn", "fail"}
+    assert report["ok"] is False

@@ -119,6 +119,37 @@ def test_streaming_sink_idempotent_under_replay(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() == first == 2
 
 
+def test_streaming_sink_keeps_every_batch_of_a_date(spark, tmp_path):
+    """A 40-file backlog drains in 3 micro-batches (16 files per
+    trigger), all on one date: every batch's rows survive in silver,
+    and a fresh-checkpoint replay rewrites the same partitions."""
+    raw_dir, out_dir = str(tmp_path / "raw"), str(tmp_path / "silver")
+    df = spark.range(200).select(
+        F.concat(F.lit("S"), (F.col("id") % 7).cast("string")).alias("stopId"),
+        F.lit("central").alias("lineId"),
+        F.lit("P").alias("platformName"),
+        F.lit("D").alias("destinationName"),
+        F.lit(10).cast("long").alias("timeToStation"),
+        F.format_string(
+            "2025-01-01T10:%02d:%02dZ", F.col("id") % 60, (F.col("id") / 60).cast("int")
+        ).alias("timestamp"),
+        F.lit("2025-01-01").cast("date").alias("date"),
+    )
+    write_bronze(df.repartition(40), raw_dir)
+
+    def run(ckpt):
+        q = run_silver_stream(
+            stg_arrivals(read_bronze_stream(spark, raw_dir)), out_dir, str(tmp_path / ckpt)
+        )
+        q.awaitTermination(120)
+        return len(q.recentProgress)
+
+    assert run("ckpt1") >= 3
+    assert spark.read.parquet(out_dir).count() == 200
+    run("ckpt2")
+    assert spark.read.parquet(out_dir).count() == 200
+
+
 def test_stop_shingle_filter_bounds_hot_candidates(spark):
     """Zipf-head stress: when every document shares boilerplate shingles
     (df = n_docs), the naive posting self-join goes quadratic — all

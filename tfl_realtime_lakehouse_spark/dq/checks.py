@@ -67,68 +67,29 @@ def value_between(
     )
 
 
-def run_checks(df: DataFrame, checks: list[Check]) -> list[CheckResult]:
-    """Evaluate every check in one aggregation pass over ``df``."""
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
+def _check_aggs(checks: list[Check]) -> list:
+    """Row count plus one violation count per check: the single
+    aggregation both the pass and the observed path evaluate."""
+    return [F.count(F.lit(1)).alias("__total")] + [
         F.sum(F.when(F.expr(c.predicate), 1).otherwise(0)).alias(f"__c{i}")
         for i, c in enumerate(checks)
     ]
-    row = df.agg(*aggs).collect()[0]
-    total = row["__total"]
+
+
+def _results(row, checks: list[Check]) -> list[CheckResult]:
+    """Status rules over an aggregated row: an empty input skips every
+    check; otherwise any violation fails (error) or warns (warning)."""
+    total = int(row["__total"])
     results = []
     for i, c in enumerate(checks):
-        if total == 0:
-            status, failed = "skipped", 0
-        else:
-            failed = int(row[f"__c{i}"] or 0)
-            if failed == 0:
-                status = "pass"
-            else:
-                status = "warn" if c.severity == "warning" else "fail"
-        results.append(
-            CheckResult(
-                name=c.name,
-                column=c.column,
-                severity=c.severity,
-                status=status,
-                failed_count=failed,
-                total=int(total),
-            )
-        )
-    return results
-
-
-def attach_observation(df: DataFrame, checks: list[Check], name: str = "dq"):
-    """Zero-extra-pass DQ: piggyback the check metrics on whatever action
-    the caller runs next via ``df.observe`` (works identically on batch
-    and streaming DataFrames — the streaming-native DQ path).
-
-    Returns ``(df, observation)``; read results with
-    :func:`results_from_observation` after an action has run.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
-        F.sum(F.when(F.expr(c.predicate), 1).otherwise(0)).alias(f"__c{i}")
-        for i, c in enumerate(checks)
-    ]
-    return df.observe(obs, *aggs), obs
-
-
-def results_from_observation(obs, checks: list[Check]) -> list[CheckResult]:
-    row = obs.get
-    total = int(row["__total"])
-    out = []
-    for i, c in enumerate(checks):
-        failed = int(row[f"__c{i}"] or 0)
+        failed = int(row[f"__c{i}"] or 0)  # SUM over no rows is NULL
         if total == 0:
             status = "skipped"
         elif failed == 0:
             status = "pass"
         else:
             status = "warn" if c.severity == "warning" else "fail"
-        out.append(
+        results.append(
             CheckResult(
                 name=c.name,
                 column=c.column,
@@ -138,7 +99,35 @@ def results_from_observation(obs, checks: list[Check]) -> list[CheckResult]:
                 total=total,
             )
         )
-    return out
+    return results
+
+
+def run_checks(df: DataFrame, checks: list[Check]) -> list[CheckResult]:
+    """Evaluate every check in one aggregation pass over ``df``."""
+    return _results(df.agg(*_check_aggs(checks)).collect()[0], checks)
+
+
+def attach_observation(df: DataFrame, checks: list[Check], name: str = "dq"):
+    """Zero-extra-pass DQ: piggyback the check metrics on whatever action
+    the caller runs next via ``df.observe`` (works identically on batch
+    and streaming DataFrames — the streaming-native DQ path). The
+    observed frame carries ``name`` in its plan, so each observed model
+    needs its own name and downstream models should read the unobserved
+    frame.
+
+    Returns ``(df, observation)``; read results with
+    :func:`results_from_observation` after an action has run.
+    """
+    from pyspark.sql import Observation
+
+    obs = Observation(name)
+    return df.observe(obs, *_check_aggs(checks)), obs
+
+
+def results_from_observation(obs, checks: list[Check]) -> list[CheckResult]:
+    """The check results an action over the observed frame recorded;
+    ``obs.get["__total"]`` is the number of rows that action saw."""
+    return _results(obs.get, checks)
 
 
 # The reference pipeline's exact check suite (9 not_null + 2 GX).

@@ -6,7 +6,7 @@ Spark-native pipeline run.
   databases (the reference's two schemas, dbt_project.yml:9-12) via
   CTAS-equivalent ``saveAsTable`` (SURVEY S9).
 - The reference's 9 dbt not_null tests + GX checks run from the DQ
-  module (single pass per model).
+  module, observed on each model's write (no extra pass per model).
 - Lineage is emitted AS DATA: a run report with per-model input/output
   datasets, row counts, durations and check results — the Marquez
   stand-in (SURVEY §7 M2), serializable straight to JSON.
@@ -23,12 +23,17 @@ from pyspark.sql import DataFrame, SparkSession
 from tfl_realtime_lakehouse_spark.dq.checks import (
     FCT_HEADWAYS_CHECKS,
     STG_ARRIVALS_CHECKS,
+    Check,
     CheckResult,
-    run_checks,
+    attach_observation,
+    results_from_observation,
 )
 from tfl_realtime_lakehouse_spark.plans.marts import fct_headways
 from tfl_realtime_lakehouse_spark.plans.staging import stg_arrivals
-from tfl_realtime_lakehouse_spark.sources.tables import read_raw_arrivals
+from tfl_realtime_lakehouse_spark.sources.tables import (
+    drop_table_and_location,
+    read_raw_arrivals,
+)
 
 
 @dataclass
@@ -46,20 +51,30 @@ class ModelRun:
 
 
 def _materialize(
-    spark: SparkSession, df: DataFrame, table_name: str, save: bool
-) -> DataFrame:
+    spark: SparkSession,
+    df: DataFrame,
+    table_name: str,
+    checks: list[Check],
+    save: bool,
+) -> tuple[DataFrame, int, list[CheckResult]]:
     """CTAS-equivalent full-refresh materialization (the reference's dbt
-    `table` materialization = full rebuild every run, T4/T6)."""
-    if save:
-        from tfl_realtime_lakehouse_spark.sources.tables import (
-            drop_table_and_location,
-        )
+    `table` materialization = full rebuild every run, T4/T6), with the
+    model's DQ checks observed on the write itself: the rows written and
+    every check come out of the one execution, with no recount or check
+    pass. ``save=False`` runs the model into a ``noop`` sink instead.
 
+    Returns the frame downstream models read (the saved table, or the
+    unobserved ``df``), the row count and the check results."""
+    observed, obs = attach_observation(df, checks, name=f"dq.{table_name}")
+    if save:
         drop_table_and_location(spark, table_name)
-        df.write.mode("overwrite").saveAsTable(table_name)
-        return spark.table(table_name)
-    df.createOrReplaceTempView(table_name.replace(".", "__"))
-    return df
+        observed.write.mode("overwrite").saveAsTable(table_name)
+        out = spark.table(table_name)
+    else:
+        observed.write.format("noop").mode("overwrite").save()
+        df.createOrReplaceTempView(table_name.replace(".", "__"))
+        out = df
+    return out, int(obs.get["__total"]), results_from_observation(obs, checks)
 
 
 def run_pipeline(
@@ -74,9 +89,9 @@ def run_pipeline(
 
     t0 = time.time()
     bronze = read_raw_arrivals(spark, raw_dir)
-    stg = _materialize(spark, stg_arrivals(bronze), "staging.stg_arrivals", save)
-    stg_rows = stg.count()
-    stg_checks = run_checks(stg, STG_ARRIVALS_CHECKS)
+    stg, stg_rows, stg_checks = _materialize(
+        spark, stg_arrivals(bronze), "staging.stg_arrivals", STG_ARRIVALS_CHECKS, save
+    )
     runs.append(
         ModelRun(
             model="stg_arrivals",
@@ -89,9 +104,9 @@ def run_pipeline(
     )
 
     t1 = time.time()
-    fct = _materialize(spark, fct_headways(stg), "marts.fct_headways", save)
-    fct_rows = fct.count()
-    fct_checks = run_checks(fct, FCT_HEADWAYS_CHECKS)
+    _, fct_rows, fct_checks = _materialize(
+        spark, fct_headways(stg), "marts.fct_headways", FCT_HEADWAYS_CHECKS, save
+    )
     runs.append(
         ModelRun(
             model="fct_headways",

@@ -27,6 +27,13 @@ ARRIVALS_RAW_SCHEMA = T.StructType(
     ]
 )
 
+# Bronze as scanned: the raw fields plus the ``date=YYYY-MM-DD`` Hive
+# partition column. Declaring it skips footer schema inference on the
+# batch scan and is required by the streaming file source.
+BRONZE_SCHEMA = T.StructType(
+    ARRIVALS_RAW_SCHEMA.fields + [T.StructField("date", T.DateType())]
+)
+
 # Silver: the staging contract (stg_arrivals.sql:18-25 + schema.yml:4-15).
 STG_ARRIVALS_SCHEMA = T.StructType(
     [

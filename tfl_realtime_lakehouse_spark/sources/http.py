@@ -28,8 +28,10 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tfl_realtime_lakehouse_spark.schemas import ARRIVALS_RAW_SCHEMA
 
@@ -159,7 +161,13 @@ def ingest_snapshot(
     raw_dir: str,
     now: datetime | None = None,
 ) -> DataFrame | None:
-    """API rows → typed bronze append under ``date=YYYY-MM-DD/``.
+    """API rows → typed bronze append under ``date=YYYY-MM-DD/``, one
+    parquet file per snapshot (the reference's ``arrivals_<ts>.parquet``
+    layout, tfl_ingest_dag.py:46-49).
+
+    The projected rows become a ``pyarrow.Table`` of the declared bronze
+    schema, which ``createDataFrame`` ships to the JVM as an Arrow local
+    relation — no Python worker processes — and the write is one task.
 
     Returns the written DataFrame, or None when there was nothing to
     write (reference: "no rows fetched; nothing written").
@@ -168,9 +176,12 @@ def ingest_snapshot(
         log.warning("no rows fetched; nothing written")
         return None
     now = now or datetime.now(timezone.utc)
-    projected = [project_arrival(r) for r in raw_rows]
-    df = spark.createDataFrame(projected, ARRIVALS_RAW_SCHEMA).withColumn(
+    table = pa.Table.from_pylist(
+        [project_arrival(r) for r in raw_rows],
+        schema=to_arrow_schema(ARRIVALS_RAW_SCHEMA),
+    )
+    df = spark.createDataFrame(table).withColumn(
         "date", F.lit(now.date().isoformat()).cast("date")
     )
-    df.write.mode("append").partitionBy("date").parquet(raw_dir)
+    df.coalesce(1).write.mode("append").partitionBy("date").parquet(raw_dir)
     return df

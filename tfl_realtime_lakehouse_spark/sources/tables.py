@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from tfl_realtime_lakehouse_spark.schemas import ARRIVALS_RAW_SCHEMA
+from tfl_realtime_lakehouse_spark.schemas import BRONZE_SCHEMA
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -170,17 +170,22 @@ def read_raw_arrivals(spark: SparkSession, raw_dir: str) -> DataFrame:
 
     Reference parity: ``read_parquet('../data/raw/date=*/arrivals_*.parquet',
     hive_partitioning=true)`` guarded by a compile-time file-count probe
-    (stg_arrivals.sql:5-14, 26-40). Spark discovers ``date=`` partitions
-    natively; when no files exist we return an empty relation with the
-    raw schema + a null date partition column so the staging projection
-    stays schema-stable.
+    (stg_arrivals.sql:5-14, 26-40). The scan is the one
+    ``read_bronze_stream`` makes: the declared ``BRONZE_SCHEMA`` (no
+    footer-inference job) over the ``date=*`` directories with
+    ``basePath`` (a handful of paths, listed on the driver instead of by
+    a parallel-listing job), ``*.parquet`` kept as a file-name filter.
+    When no files exist we return an empty relation of the same schema
+    so the staging projection stays schema-stable.
     """
     if glob.glob(os.path.join(raw_dir, "date=*", "*.parquet")):
-        return spark.read.option("basePath", raw_dir).parquet(
-            os.path.join(raw_dir, "date=*", "*.parquet")
+        return (
+            spark.read.schema(BRONZE_SCHEMA)
+            .option("basePath", raw_dir)
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(os.path.join(raw_dir, "date=*"))
         )
-    schema = T.StructType(ARRIVALS_RAW_SCHEMA.fields + [T.StructField("date", T.DateType())])
-    return spark.createDataFrame([], schema)
+    return spark.createDataFrame([], BRONZE_SCHEMA)
 
 
 def drop_table_and_location(spark: SparkSession, table_name: str) -> None:

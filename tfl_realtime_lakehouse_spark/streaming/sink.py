@@ -2,11 +2,14 @@
 idempotent MERGE, or full-rebuild batch job").
 
 No Delta in this environment (``import delta`` gated), so idempotence
-comes from **dynamic partition overwrite** inside ``foreachBatch``: a
-replayed micro-batch rewrites exactly the date partitions it touches —
-same bytes, no duplicates — which is the parquet-native equivalent of a
-partition-scoped MERGE. Checkpointing makes replays rare; the overwrite
-makes them harmless.
+comes from **dynamic partition overwrite** inside ``foreachBatch``. Each
+micro-batch owns its ``(date, batch_id)`` partitions: a replayed batch
+rewrites exactly those — same bytes, no duplicates — which is the
+parquet-native equivalent of a partition-scoped MERGE, while a later
+batch touching the same date adds its own partition instead of
+replacing the earlier batches' rows (the pattern
+:mod:`~tfl_realtime_lakehouse_spark.streaming.incremental` uses).
+Checkpointing makes replays rare; the overwrite makes them harmless.
 """
 
 from __future__ import annotations
@@ -17,8 +20,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 
 def silver_partition_overwrite_writer(out_dir: str):
-    """foreachBatch callback: write the batch date-partitioned with
-    dynamic partition overwrite (idempotent under replay)."""
+    """foreachBatch callback: write the batch partitioned by
+    ``(date, batch_id)`` with dynamic partition overwrite (idempotent
+    under replay, additive across batches)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -27,8 +31,9 @@ def silver_partition_overwrite_writer(out_dir: str):
         try:
             (
                 batch_df.withColumn("date", F.to_date("event_ts"))
+                .withColumn("batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
-                .partitionBy("date")
+                .partitionBy("date", "batch_id")
                 .parquet(out_dir)
             )
         finally:
