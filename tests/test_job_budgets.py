@@ -1,7 +1,7 @@
-"""Spark-job budgets of the refresh cycle: the host-independent counters
-behind its cost, pinned the way test_plan_regressions.py pins shuffle
-exchanges. Counts are upper bounds — a cycle may get cheaper, never
-dearer."""
+"""Spark-job budgets of the refresh cycle and the query path: the
+host-independent counters behind their cost, pinned the way
+test_plan_regressions.py pins shuffle exchanges. Counts are upper
+bounds — a cycle or query may get cheaper, never dearer."""
 
 from __future__ import annotations
 
@@ -11,11 +11,15 @@ import uuid
 from contextlib import contextmanager
 from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import types as T
 
 from tfl_realtime_lakehouse_spark.plans.runner import run_pipeline
+from tfl_realtime_lakehouse_spark.queries import REGISTRY
 from tfl_realtime_lakehouse_spark.sources.http import ingest_snapshot
-from tfl_realtime_lakehouse_spark.sources.tables import read_raw_arrivals
+from tfl_realtime_lakehouse_spark.sources.tables import read_raw_arrivals, read_table
 
 T0 = datetime(2025, 1, 1, 10, 0, tzinfo=timezone.utc)
 SNAPSHOTS = 40  # past Spark's 32-path parallel-listing threshold
@@ -88,3 +92,65 @@ def test_refresh_runs_at_most_three_jobs(spark, bronze):
     assert report["ok"]
     assert report["models"][0]["rows"] == 3 * SNAPSHOTS
     assert len(jobs) <= 3
+
+
+def test_repeated_read_table_starts_no_job(spark, sf_smoke):
+    """The footer schema is inferred once per file; a repeated read
+    passes it to the reader instead of running an inference job."""
+    for name in ("lineitem", "events"):
+        first = read_table(spark, sf_smoke, name)
+        with _jobs(spark) as jobs:
+            again = read_table(spark, sf_smoke, name)
+        assert jobs == []
+        assert again.schema == first.schema
+    assert isinstance(again.schema["ts"].dataType, T.TimestampType)
+
+
+def test_read_table_infers_again_after_rewrite_or_conf_change(spark, tmp_path):
+    sf_dir = str(tmp_path)
+    path = os.path.join(sf_dir, "t.parquet")
+    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
+    assert read_table(spark, sf_dir, "t").columns == ["a"]
+    with _jobs(spark) as jobs:
+        assert read_table(spark, sf_dir, "t").columns == ["a"]
+    assert jobs == []
+    pq.write_table(
+        pa.table({"b": pa.array([b"x"], pa.binary()), "c": pa.array([1.5], pa.float64())}),
+        path,
+    )
+    with _jobs(spark) as jobs:
+        df = read_table(spark, sf_dir, "t")
+    assert len(jobs) == 1
+    assert df.columns == ["b", "c"] and df.collect()[0]["c"] == 1.5
+    assert isinstance(df.schema["b"].dataType, T.BinaryType)
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        with _jobs(spark) as jobs:
+            df = read_table(spark, sf_dir, "t")
+        assert len(jobs) == 1
+        assert isinstance(df.schema["b"].dataType, T.StringType)
+        assert df.collect()[0]["b"] == "x"
+        with _jobs(spark) as jobs:
+            read_table(spark, sf_dir, "t")
+        assert jobs == []
+    finally:
+        spark.conf.set(key, prev)
+    assert isinstance(read_table(spark, sf_dir, "t").schema["b"].dataType, T.BinaryType)
+
+
+@pytest.mark.parametrize(
+    "query, budget",
+    [("q1_pricing_summary", 2), ("q5_region_revenue", 7), ("graph_pagerank", 15)],
+)
+def test_query_job_budget(spark, sf_smoke, query, budget):
+    """Jobs of one noop-sink run of a query with warm footer schemas:
+    q1 is its aggregation's map stage and result; q5's joins broadcast
+    its small tables; PageRank's three rounds each run one broadcast
+    and one shuffle besides the lineage cut."""
+    fn = REGISTRY[query].fn
+    fn(spark, sf_smoke).write.format("noop").mode("overwrite").save()
+    with _jobs(spark) as jobs:
+        fn(spark, sf_smoke).write.format("noop").mode("overwrite").save()
+    assert len(jobs) <= budget

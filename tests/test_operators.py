@@ -1667,6 +1667,67 @@ def test_pagerank_properties_and_determinism(spark):
     assert sum(pr1.values()) <= 1.000001
     # hand-computed it3 values for the chain: sources at the floor
     assert pr1[2] == 0.03 and pr1[1] == 0.1065 and pr1[5] == 0.120525
+    assert pr1 == _pagerank_reference(edges, iters=3)
+
+    # self-loops (7, 3), duplicate edges, destination-only nodes (8, 9)
+    # and source-only nodes (10, 11): identical to the reference loop on
+    # the broadcast and the shuffle-join path, at every round count
+    messy = spark.createDataFrame(
+        [(7, 7), (3, 3), (3, 8), (3, 8), (10, 3), (10, 3), (10, 7),
+         (11, 9), (7, 9), (11, 7), (3, 7), (7, 3)],
+        "src long, dst long",
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        for threshold in (prev, "-1"):
+            spark.conf.set(key, threshold)
+            for iters in (0, 1, 3, 5):
+                got = {r["node"]: r["pagerank"] for r in pagerank(messy, iters=iters).collect()}
+                assert set(got) == {3, 7, 8, 9, 10, 11}
+                assert got == _pagerank_reference(messy, iters=iters)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _pagerank_reference(edges, iters: int, damping: float = 0.85) -> dict:
+    """The former operators/graph.py:pagerank loop (distinct nodes, a
+    count job, a ratio join and a left join back onto the node set per
+    round), kept as the bit-identity reference for the one-shuffle
+    rounds."""
+    e0 = edges.select("src", "dst").distinct().localCheckpoint()
+    nodes = (
+        e0.select(F.col("src").alias("node"))
+        .union(e0.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
+    n = nodes.count()
+    outdeg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).localCheckpoint()
+    pr = nodes.select("node", F.lit(1.0 / n).alias("pr")).localCheckpoint()
+    base = (1 - damping) / n
+    for _ in range(iters):
+        ratio = pr.join(outdeg, pr["node"] == outdeg["src"]).select(
+            outdeg["src"].alias("rsrc"), (F.col("pr") / F.col("outdeg")).alias("r")
+        )
+        sums = (
+            e0.join(ratio, e0["src"] == ratio["rsrc"])
+            .select(F.col("dst").alias("node"), F.col("r").cast("decimal(27,12)").alias("c"))
+            .groupBy("node")
+            .agg(F.sum("c").alias("s"))
+        )
+        pr = (
+            nodes.join(sums, "node", "left")
+            .select(
+                "node",
+                (
+                    F.lit(base)
+                    + F.lit(damping) * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
+                ).alias("pr"),
+            )
+            .localCheckpoint()
+        )
+    return {r["node"]: r["pagerank"] for r in pr.select("node", F.round("pr", 6).alias("pagerank")).collect()}
 
 
 def test_triangle_count_known_graphs(spark):

@@ -375,6 +375,53 @@ def test_incremental_gold_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(silver_dir).count() == silver_n + 1
 
 
+def test_sink_writers_leave_session_conf_unchanged(spark, tmp_path, monkeypatch):
+    """Both foreachBatch sinks get dynamic partition overwrite from a
+    writer option: the shared session conf, which concurrent queries on
+    the session read, is never set, and a later batch still keeps the
+    earlier batches' partitions while a replay replaces its own."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from tfl_realtime_lakehouse_spark.streaming.incremental import (
+        incremental_gold_writer,
+    )
+    from tfl_realtime_lakehouse_spark.streaming.sink import (
+        silver_partition_overwrite_writer,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    set_keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, k, v):
+        set_keys.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    batches = [
+        stg_arrivals(
+            spark.createDataFrame(
+                [("S1", "central", "P", "D", 1, t)],
+                "stopId string, lineId string, platformName string, "
+                "destinationName string, timeToStation long, timestamp string",
+            ).withColumn("date", F.lit("2025-01-01").cast("date"))
+        )
+        for t in ("2025-01-01T10:00:00Z", "2025-01-01T10:20:00Z")
+    ]
+    silver_dir, inc_dir = str(tmp_path / "silver"), str(tmp_path / "inc-silver")
+    for writer, out_dir in (
+        (silver_partition_overwrite_writer(silver_dir), silver_dir),
+        (incremental_gold_writer(inc_dir, str(tmp_path / "gold")), inc_dir),
+    ):
+        writer(batches[0], 0)
+        writer(batches[1], 1)
+        writer(batches[0], 0)  # replay
+        assert spark.conf.get(key) == before
+        assert spark.read.parquet(out_dir).count() == 2
+    assert key not in set_keys
+
+
 def test_datasource_to_gold_medallion_pipeline(spark, tmp_path):
     """End-to-end composition: the tfl_arrivals streaming DataSource
     feeds bronze, the bronze file-stream feeds the staged silver sink,

@@ -4,39 +4,44 @@ Complements the dedup family's connected components (dedup.py — which
 resolves SIMILARITY graphs into clusters) with the other classic
 massive-graph primitive: importance scoring by power iteration.
 
-Scale shape: each iteration is one NODE-sized equi-join (rank ⋈
-outdeg → per-src ratio) feeding one edge equi-join plus one
-map-side-combined groupBy on dst — shuffles keyed by node id, no
-driver state beyond the node count. The edge relation is materialized
-exactly once (the round-7 probe showed a second edge-wide
-e ⋈ outdeg checkpoint bought nothing: the per-round cost is the edge
-shuffle itself, so the narrow e0 + node-sized outdeg join is strictly
-less bytes). Lineage is cut per iteration with localCheckpoint so the
-plan stays O(1) deep in the iteration count (same discipline as
-kmeans_train / connected_components).
+Scale shape: the distinct edge set and a node-sized state
+``(node, outdeg, pr)`` are materialized once, the state in ONE
+aggregation whose observed row count is N (no separate count job).
+Each round then has one shuffle: the per-source ratio pr/outdeg is a
+narrow projection of the state, the edges join it (broadcast when N
+rows of it fit ``autoBroadcastJoinThreshold``, a shuffle join
+otherwise), a zero contribution per node is unioned in so every node
+keeps a row, and one ``groupBy(node)`` sums the contributions and
+carries outdeg into the next state. Lineage is cut per round with
+localCheckpoint so the plan stays O(1) deep in the iteration count
+(same discipline as kmeans_train / connected_components).
 
 Determinism: float addition is order-dependent, and a parallel SUM of
 double contributions would make ranks nondeterministic across runs and
 engines. Contributions are therefore cast to DECIMAL(27,12) before the
 sum — exact, order-independent, and bit-reproducible in DuckDB (the
 engine's proven decimal-exact-sum idiom from counter rates) — then one
-IEEE multiply/add per node back in double. With a FIXED iteration
-count the whole recurrence is closed-form deterministic, which is what
-makes a cross-engine oracle possible at all (the oracle unrolls the
-same iterations in SQL).
+IEEE multiply/add per node back in double. The zero contributions leave
+every exact sum unchanged. With a FIXED iteration count the whole
+recurrence is closed-form deterministic, which is what makes a
+cross-engine oracle possible at all (the oracle unrolls the same
+iterations in SQL).
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Lineage-cut blocks are stored SERIALIZED with disk spill: the default
-# deserialized on-heap level holds ~10x the on-wire size, which is what
-# OOMed an sf5 sweep's ~30M-row edge checkpoints on an 8 GiB local JVM.
-# Storage level changes only the cached representation, never the values.
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK  # serialized in PySpark
+from tfl_realtime_lakehouse_spark.operators.materialize import (
+    CKPT_LEVEL as _CKPT_LEVEL,
+    fits_broadcast,
+    materialize,
+)
+
+# A (src bigint, r double) row of the per-round ratio side: two 8-byte
+# fields behind UnsafeRow's 8-byte null bitset.
+_RATIO_ROW_BYTES = 24
 
 
 def pagerank(
@@ -51,61 +56,45 @@ def pagerank(
     (dangling mass leaks rather than redistributes — documented, and
     identical in the oracle). Returns (node, pagerank) for every node
     appearing as src or dst, pagerank rounded to 6 dp."""
-    # materialize the distinct edge set once: nodes, outdeg and the
-    # per-iteration joins all hang off it
     e0 = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
         .localCheckpoint(storageLevel=_CKPT_LEVEL)
     )
-    nodes = (
-        e0.select(F.col("src").alias("node"))
-        .union(e0.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+    # every node with its out-degree (0 for destination-only nodes)
+    state, n = materialize(
+        e0.select(F.col("src").alias("node"), F.lit(1).alias("out"))
+        .unionAll(e0.select(F.col("dst").alias("node"), F.lit(0).alias("out")))
+        .groupBy("node")
+        .agg(F.sum("out").alias("outdeg"))
     )
-    n = nodes.count()  # one scalar of driver state — the model, not the data
-    # outdeg stays NODE-sized and joins into the rank side each round;
-    # the former e = e0 ⋈ outdeg edge-relation materialization was a
-    # second full O(|E|) checkpoint plus an outdeg column riding every
-    # per-round edge shuffle — eliminated round 7 (bit-identical: the
-    # pr/outdeg division sees the same two doubles whether it runs per
-    # src or per edge; probe tools/profile_graph_variants2_r7.py,
-    # result hashes equal, ~20% faster warm at sf5).
-    outdeg = e0.groupBy("src").agg(
-        F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
-
-    pr = nodes.select("node", F.lit(1.0 / n).alias("pr")).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    broadcast = fits_broadcast(e0.sparkSession, n, _RATIO_ROW_BYTES)
+    state = state.withColumn("pr", F.lit(1.0 / n))
     base = (1 - damping) / n  # IEEE-evaluated once; oracle mirrors the op tree
+    zero = F.lit(0).cast("decimal(27,12)")
     for _ in range(iters):
-        ratio = pr.join(outdeg, pr["node"] == outdeg["src"]).select(
-            outdeg["src"].alias("rsrc"),
+        ratio = state.where(F.col("outdeg") > 0).select(
+            F.col("node").alias("src"),
             (F.col("pr") / F.col("outdeg")).alias("r"),
         )
-        sums = (
-            e0.join(ratio, e0["src"] == ratio["rsrc"])
-            .select(
-                F.col("dst").alias("node"),
-                # decimal-exact contribution: order-independent sum
-                F.col("r").cast("decimal(27,12)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
+        contrib = e0.join(F.broadcast(ratio) if broadcast else ratio, "src").select(
+            F.col("dst").alias("node"),
+            # decimal-exact contribution: order-independent sum
+            F.col("r").cast("decimal(27,12)").alias("c"),
+            F.lit(0).cast("bigint").alias("outdeg"),
         )
-        pr = (
-            nodes.join(sums, "node", "left")
+        state = (
+            contrib.unionAll(state.select("node", zero.alias("c"), "outdeg"))
+            .groupBy("node")
+            .agg(F.sum("c").alias("s"), F.max("outdeg").alias("outdeg"))
             .select(
                 "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                ).alias("pr"),
+                "outdeg",
+                (F.lit(base) + F.lit(damping) * F.col("s").cast("double")).alias("pr"),
             )
             .localCheckpoint(storageLevel=_CKPT_LEVEL)
         )
-    return pr.select("node", F.round("pr", 6).alias("pagerank"))
+    return state.select("node", F.round("pr", 6).alias("pagerank"))
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

@@ -691,12 +691,15 @@ def _pagerank_oracle(iters: int = 3) -> str:
     doc="Fixed-iteration PageRank (3 power iterations, damping 0.85) "
     "over the customer→supplier trade graph (orders x lineitem, "
     "supplier ids offset into their own node space) — the link-analysis "
-    "member of the graph family next to connected components. Each "
-    "iteration is one src equi-join + one map-side-combined groupBy on "
-    "dst, lineage cut per iteration; contributions are "
-    "decimal(27,12)-exact so the parallel sum is order-independent and "
-    "the whole recurrence hash-matches the unrolled DuckDB oracle. "
-    "operators/graph.py.",
+    "member of the graph family next to connected components. The node "
+    "state (node, outdeg) is built in one aggregation whose observed row "
+    "count is N; each iteration then has one shuffle: pr/outdeg is a "
+    "narrow projection of the state, the edges join it (broadcast when "
+    "it fits autoBroadcastJoinThreshold), a zero contribution per node "
+    "is unioned in and one groupBy(node) sums, lineage cut per "
+    "iteration; contributions are decimal(27,12)-exact so the parallel "
+    "sum is order-independent and the whole recurrence hash-matches the "
+    "unrolled DuckDB oracle. operators/graph.py.",
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tfl_realtime_lakehouse_spark.operators.graph import pagerank

@@ -34,7 +34,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = _read_parquet_file(spark, os.path.join(sf_dir, "events.parquet"))
         from pyspark.sql import functions as F
 
         if isinstance(df.schema["ts"].dataType, T.LongType):
@@ -48,7 +48,43 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # downstream unix_micros/windowing sees one timestamp type.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet_file(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+# Session confs that change what Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# path -> ((inode, size, mtime_ns, inference confs), schema). Readers
+# that race on one path may both infer; each uses its own result.
+_FOOTER_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once.
+
+    Footer inference is a Spark job on every read, so a repeated query
+    over the same table paid it each time. The inferred schema is kept
+    per path under the file's inode, size, ``st_mtime_ns`` and the
+    session's inference confs, and passed with ``spark.read.schema``: a
+    repeated read starts no job. A file rewritten in place, or a read
+    under other inference confs, is inferred again. Directories and
+    non-local paths are read uncached."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    stamp = (st.st_ino, st.st_size, st.st_mtime_ns) + tuple(
+        spark.conf.get(c, None) for c in _INFERENCE_CONFS
+    )
+    cached = _FOOTER_SCHEMAS.get(path)
+    if cached is not None and cached[0] == stamp:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _FOOTER_SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:

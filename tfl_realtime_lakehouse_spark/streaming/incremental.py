@@ -57,20 +57,15 @@ def incremental_gold_writer(silver_dir: str, gold_dir: str):
             # headways in the recomputed gold). Idempotence the same way
             # sink.py gets it: each micro-batch owns its batch_id
             # partition, and dynamic partition overwrite makes a replay
-            # rewrite that partition instead of appending to it.
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
+            # rewrite that partition instead of appending to it (a
+            # writer option: the shared session conf stays untouched).
+            (
+                batch_df.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(silver_dir)
             )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    batch_df.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(silver_dir)
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             touched = batch_df.select("line_id", "stop_id").distinct()
 
             silver = spark.read.parquet(silver_dir).drop("batch_id")

@@ -22,22 +22,19 @@ from pyspark.sql.streaming import StreamingQuery
 def silver_partition_overwrite_writer(out_dir: str):
     """foreachBatch callback: write the batch partitioned by
     ``(date, batch_id)`` with dynamic partition overwrite (idempotent
-    under replay, additive across batches)."""
+    under replay, additive across batches). The mode is a writer option,
+    so the shared session's conf, which concurrent queries read, is
+    never touched."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn("date", F.to_date("event_ts"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("date", "batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            batch_df.withColumn("date", F.to_date("event_ts"))
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("date", "batch_id")
+            .parquet(out_dir)
+        )
 
     return write
 
